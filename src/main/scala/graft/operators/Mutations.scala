@@ -261,16 +261,20 @@ object Mutations {
     * version (guide §1.2 #1 / §2.6: the version scans are independent —
     * one action lets the scheduler overlap them, and N-1 driver round
     * trips disappear). Values and column names/types are identical to the
-    * former per-version collect loop; every caller stays oracle-gated. */
-  private def versionSummaries(vs: Seq[String], read: String => DataFrame,
-      cur: Option[String] = None): DataFrame =
-    vs.map { v =>
-      val base = read(v)
+    * former per-version collect loop; every caller stays oracle-gated. An
+    * empty version list gives zero rows of the same schema. */
+  private[graft] def versionSummaries(vs: Seq[String], read: String => DataFrame,
+      cur: Option[String] = None): DataFrame = {
+    def summary(v: String, df: DataFrame): DataFrame = {
+      val base = df
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("doc_id")), lit(0L)).as("sum_ids"))
         .select(lit(v).as("version"), col("n_docs"), col("sum_ids"))
       cur.fold(base)(c => base.withColumn("is_current", lit(v == c)))
-    }.reduce(_ unionByName _)
+    }
+    if (vs.isEmpty) summary("", SparkSession.active.range(0).toDF("doc_id")).limit(0)
+    else vs.map(v => summary(v, read(v))).reduce(_ unionByName _)
+  }
 
   private lazy val timeTravelRoot: String = Dedup.processTempDir("graft_time_travel")
 

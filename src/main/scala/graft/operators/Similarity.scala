@@ -1201,6 +1201,7 @@ object Similarity {
           else r.getSeq[Any](1).iterator.map {
             case f: java.lang.Float => f.toDouble // float→double widening,
             case n: java.lang.Number => n.doubleValue // as cosineSim does
+            case null => 0.0 // cosineSim reads a null slot's zeroed value
           }.toArray
         val rows = taken.map(r => (r.getLong(0), embOf(r)))
         val seedRow = rows.minBy(_._1)

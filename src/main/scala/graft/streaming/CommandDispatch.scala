@@ -58,44 +58,28 @@ object CommandDispatch {
       state: EngineState, commands: DataFrame): (EngineState, DataFrame) =
     dispatchWith(state, commands, Some(threshold))
 
-  /** Per-batch cache registry: dispatch caches small frames that several
-    * branches re-read (the command batch, the rejected-id set, FIFO runs).
-    * Inside a long-lived foreachBatch stream those blocks would otherwise
-    * accumulate across micro-batches until executor-cache pressure evicts
-    * them, so [[runStream]] releases them once the batch's snapshot and
-    * messages are on disk (the caches are fully consumed by then).
-    *
-    * The registry is THREAD-scoped (each streaming query executes its
-    * micro-batches on its own thread): a JVM-global queue would let one
-    * stream's release unpersist a concurrent stream's in-flight caches.
-    * Outside [[withBatchCaches]] (plain batch callers) frames are cached
-    * without registration — the pre-existing behavior. */
-  private val batchCaches = new scala.util.DynamicVariable[
-    Option[scala.collection.mutable.ArrayBuffer[DataFrame]]](None)
+  /** A batch-sized frame collected once into a `LocalRelation`. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  private def cached(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    batchCaches.value.foreach(_ += c)
-    c
-  }
-
-  /** Run `body` with a fresh cache registry, then unpersist everything the
-    * enclosed dispatch calls cached. The result of `body` must already be
-    * MATERIALIZED (written out) when it returns. */
-  def withBatchCaches[A](body: => A): A = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try batchCaches.withValue(Some(buf))(body)
-    finally buf.foreach(_.unpersist(blocking = false))
-  }
-
+  /** One dispatch plan per command batch. A command batch is DRIVER-SIZED:
+    * the stream bounds it through `maxOffsetsPerTrigger` /
+    * `maxFilesPerTrigger` (the reference's queue holds 40, DI:37). So the
+    * batch is collected once and its delta is computed on the driver:
+    * the commands, the existing names they probe, and the accepted
+    * categories and documents become `LocalRelation`s that fold into the
+    * write plans as literals instead of re-running per consumer. Only the
+    * state tables are scanned by the writes. */
   private def dispatchWith(state: EngineState, commands: DataFrame,
       contentDedup: Option[Double]): (EngineState, DataFrame) = {
-    val cmds = cached(commands)
-
-    // 2: add categories (uniqueness on name, M7)
-    val catAdds = cmds.filter(col("action_code") === 2)
-      .select(col("category_id"), col("category_name"))
-    val cats1 = Mutations.dimInsert(state.categories, catAdds, "category_name")
+    // distinct non-null values of a column (no job over a local frame)
+    def values(df: DataFrame, c: String): Seq[Any] =
+      df.select(c).collect().iterator.map(_.get(0)).filter(_ != null).toSeq.distinct
+    def in(c: String, vs: Seq[Any]) = if (vs.isEmpty) lit(false) else col(c).isin(vs: _*)
+    // the left_anti rule as a literal-set filter: a null key is never deleted
+    def dropKeys(df: DataFrame, c: String, vs: Seq[Any]) = df.filter(col(c).isNull || !in(c, vs))
+    val cmds = local(commands)
+    def ofCode(code: Int) = cmds.filter(col("action_code") === code)
 
     // 1: uploads — dedup on name (M1/J3), dim lookup (J1), snippet gen (F3/F4).
     // The state's docs table OPTIONALLY carries document_expiryDate
@@ -109,36 +93,46 @@ object CommandDispatch {
       if (cmds.columns.contains("document_expiryDate"))
         col("document_expiryDate").cast("string")
       else lit(null).cast("string")
-    val uploads = cmds.filter(col("action_code") === 1)
+    val uploads = ofCode(1)
       .select(Seq(col("document_id"), col("document_name"), col("category_id"),
         col("text")) ++
         (if (hasExpiry) Seq(expiryCmd.as("document_expiryDate")) else Nil): _*)
+    val uploadCatIds = values(uploads, "category_id")
+
+    // 2: add categories (uniqueness on name, M7). One probe of the category
+    // table serves both the added names and the uploads' category lookup.
+    val catAdds = ofCode(2).select(col("category_id"), col("category_name"))
+    val addNames = values(catAdds, "category_name")
+    val catProbe = local(state.categories
+      .filter(in("category_name", addNames) || in("category_id", uploadCatIds))
+      .select(col("category_id"), col("category_name")))
+    val existingCats = catProbe.filter(in("category_name", addNames)).select("category_name")
+    val acceptedCats = local(Mutations.acceptedNew(existingCats, catAdds, "category_name"))
+    val cats1 = state.categories.unionByName(acceptedCats)
+    val uploadCats = catProbe.unionByName(acceptedCats).filter(in("category_id", uploadCatIds))
     val newDocs = uploads
-      .join(broadcast(cats1.select(col("category_id"), col("category_name"))), Seq("category_id"), "left")
+      .join(broadcast(uploadCats), Seq("category_id"), "left")
       .withColumn("document_status", lit("Active"))
       .select(Seq("document_id", "document_name", "category_id", "category_name",
         "text", "document_status") ++
         (if (hasExpiry) Seq("document_expiryDate") else Nil) map col: _*)
+    val uploadNames = values(uploads, "document_name")
+    val existingNames = local(state.docs.filter(in("document_name", uploadNames))
+      .select("document_name"))
     // the accepted set is computed ONCE and drives both the docs append and
     // snippet generation — so a within-batch duplicate name contributes
     // exactly one doc row and one snippet set (no orphan snippets)
-    val nameAccepted = Mutations.acceptedNew(state.docs, newDocs, "document_name")
+    val nameAccepted = local(Mutations.acceptedNew(existingNames, newDocs, "document_name"))
     // optional content near-dup gate: reject uploads whose TEXT is a
     // near-dup of an existing doc (the streaming content-dedup extension).
     // This re-signs state.docs per batch — at scale keep the persisted
     // MinHash index (Dedup.writeIndex/probeIndex/appendIndex) instead.
-    val contentRejected = contentDedup.map { t =>
-      graft.operators.Dedup.crossNearDups(
+    val rejected = contentDedup.fold(Seq.empty[Any]) { t =>
+      values(graft.operators.Dedup.crossNearDups(
         nameAccepted.select(col("document_id").as("doc_id"), col("text")),
-        state.docs.select(col("document_id").as("doc_id"), col("text")), t)
-        .select(col("doc_a").as("document_id")).distinct()
-        .transform(cached)
+        state.docs.select(col("document_id").as("doc_id"), col("text")), t), "doc_a")
     }
-    val acceptedDocs = contentRejected match {
-      case Some(rej) => nameAccepted.join(broadcast(rej), Seq("document_id"), "left_anti")
-      case None => nameAccepted
-    }
-    val docs1 = state.docs.unionByName(acceptedDocs)
+    val acceptedDocs = dropKeys(nameAccepted, "document_id", rejected)
     val newSnippets = acceptedDocs
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("document_status"),
@@ -146,40 +140,31 @@ object CommandDispatch {
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("s.snippet_id").as("snippet_id"), col("s.snippet_text").as("snippet_text"),
         col("document_status"))
-    val snippets1 = state.snippets.unionByName(newSnippets)
 
-    // 0: remove documents by name (M4/M8) — cascade to snippets
-    val removeNames = cmds.filter(col("action_code") === 0).select("document_name")
-    val docs2 = Mutations.deleteKeys(docs1, removeNames, "document_name")
-    val snippets2 = Mutations.deleteKeys(snippets1, removeNames, "document_name")
+    // 0: remove documents by name (M4/M8), 3: remove categories (M5) —
+    // both cascade to snippets, category removes to docs too
+    val removeNames = values(ofCode(0), "document_name")
+    val removeCats = values(ofCode(3), "category_id")
+    def removed(df: DataFrame) =
+      dropKeys(dropKeys(df, "document_name", removeNames), "category_id", removeCats)
+    val docs = removed(state.docs.unionByName(acceptedDocs))
+    val snippets = removed(state.snippets.unionByName(newSnippets))
+    val cats = dropKeys(cats1, "category_id", removeCats)
 
-    // 3: remove categories (M5) — cascade to docs + snippets
-    val removeCats = cmds.filter(col("action_code") === 3).select("category_id")
-    val cats2 = Mutations.deleteKeys(cats1, removeCats, "category_id")
-    val docs3 = Mutations.deleteKeys(docs2, removeCats, "category_id")
-    val snippets3 = Mutations.deleteKeys(snippets2, removeCats, "category_id")
-
-    // status messages (C3 analog), one per command
-    val existingNames = state.docs.select(col("document_name").as("n")).distinct()
-    val existingCats = state.categories.select(col("category_name").as("cn")).distinct()
-    val rejIds = contentRejected
-      .map(_.select(col("document_id").as("rid"), lit(1).as("__rej")))
-      .getOrElse(cmds.filter(lit(false))
-        .select(col("document_id").as("rid"), lit(1).as("__rej")))
-    val messages = cmds
-      .join(existingNames, cmds("document_name") === col("n"), "left")
-      .join(existingCats, cmds("category_name") === col("cn"), "left")
-      .join(broadcast(rejIds), cmds("document_id") === col("rid"), "left")
-      .select(col("action_code"), col("document_name"), col("category_name"),
-        when(col("action_code") === 1 && col("n").isNotNull,
+    // status messages (C3 analog), one per command: a projection over the
+    // command rows with this batch's probe results as literal sets
+    val nameExists = in("document_name", values(existingNames, "document_name"))
+    val catExists = in("category_name", values(existingCats, "category_name"))
+    val messages = cmds.select(col("action_code"), col("document_name"), col("category_name"),
+        when(col("action_code") === 1 && nameExists,
             format_string("Document %s already exists", col("document_name")))
-          .when(col("action_code") === 1 && col("__rej").isNotNull,
+          .when(col("action_code") === 1 && in("document_id", rejected),
             format_string("Document %s is a near-duplicate", col("document_name")))
           .when(col("action_code") === 1,
             format_string("Document %s was uploaded", col("document_name")))
           .when(col("action_code") === 0,
             format_string("Document %s was removed", col("document_name")))
-          .when(col("action_code") === 2 && col("cn").isNotNull,
+          .when(col("action_code") === 2 && catExists,
             format_string("Category %s already exists", col("category_name")))
           .when(col("action_code") === 2,
             format_string("Category %s was added", col("category_name")))
@@ -187,7 +172,7 @@ object CommandDispatch {
             format_string("Category %d was removed", col("category_id")))
           .otherwise(lit("Unknown action"))
           .as("message"))
-    (EngineState(docs3, snippets3, cats2), messages)
+    (EngineState(docs, snippets, cats), messages)
   }
 
   /** Oracle-checked batch demo: seed state from the test tables (documents
@@ -274,9 +259,9 @@ object CommandDispatch {
     * arrival order. Implementation: split the batch into RUNS of
     * consecutive same-type commands and fold [[dispatch]] over the runs —
     * within a run the per-type batch semantics are already order-free, so
-    * the fold reproduces the exact one-at-a-time queue result. Only the
-    * run ids (a handful of ints per micro-batch) are collected to the
-    * driver; command data never leaves the cluster. Use this dispatcher
+    * the fold reproduces the exact one-at-a-time queue result. The
+    * driver-sized batch is collected once with its run ids, and every run
+    * is dispatched from that local frame. Use this dispatcher
     * when a batch may interleave conflicting commands on the same key
     * (e.g. upload -> remove -> re-upload of one name); for
     * non-conflicting batches it is equivalent to [[dispatch]]. */
@@ -285,14 +270,12 @@ object CommandDispatch {
     // a command batch is an inherently sequential queue: the unpartitioned
     // window is over one micro-batch, not a data table
     val w = org.apache.spark.sql.expressions.Window.orderBy(col(seqCol))
-    val runs = commands
+    val runs = local(commands
       .withColumn("__chg",
         when(col("action_code") === lag(col("action_code"), 1).over(w), 0).otherwise(1))
       .withColumn("__run", sum(col("__chg")).over(w))
-      .drop("__chg")
-      .transform(cached)
-    val runIds = runs.select("__run").distinct().orderBy("__run")
-      .collect().map(_.getLong(0))
+      .drop("__chg"))
+    val runIds = runs.select("__run").collect().map(_.getLong(0)).distinct.sorted
     if (runIds.isEmpty) return dispatch(state, commands) // empty micro-batch
     var st = state
     val messages = runIds.map { r =>
@@ -351,12 +334,15 @@ object CommandDispatch {
       dispatcher: (EngineState, DataFrame) => (EngineState, DataFrame) = dispatch,
       maintenance: EngineState => EngineState = identity,
       checkpoint: Option[String] = None): StreamingQuery = {
+    // the schemas of the snapshot this query wrote last: reading it back
+    // with them skips parquet schema inference, one job per table
+    var written: Option[(Long, Seq[StructType])] = None
     def loadState(id: Long): Option[EngineState] = {
       val ok = new java.io.File(s"$stateDir/$id/categories/_SUCCESS").exists()
-      if (ok) Some(EngineState(
-        spark.read.parquet(s"$stateDir/$id/docs"),
-        spark.read.parquet(s"$stateDir/$id/snippets"),
-        spark.read.parquet(s"$stateDir/$id/categories")))
+      val schemas = written.collect { case (`id`, s) => s }
+      def read(table: String, i: Int) =
+        schemas.fold(spark.read)(s => spark.read.schema(s(i))).parquet(s"$stateDir/$id/$table")
+      if (ok) Some(EngineState(read("docs", 0), read("snippets", 1), read("categories", 2)))
       else None
     }
     def latestBelow(batchId: Long): Option[EngineState] = {
@@ -369,23 +355,20 @@ object CommandDispatch {
       (w, c) => w.option("checkpointLocation", c))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the registry scope ends after the writes below: snapshot +
-        // messages are on disk by then, so the batch's cached frames are
-        // fully consumed and safe to unpersist
-        withBatchCaches {
-          val base = if (batchId == 0) initial else latestBelow(batchId).getOrElse(initial)
-          val (dispatched, messages) = dispatcher(base, batch)
-          // maintenance INSIDE the batch transaction: the swept state is
-          // what persists, so batch replay reproduces it (T4 streaming)
-          val next = maintenance(dispatched)
-          // materialize snapshots so state does not re-read mutated streams
-          val dir = s"$stateDir/$batchId"
-          next.docs.write.mode("overwrite").parquet(s"$dir/docs")
-          next.snippets.write.mode("overwrite").parquet(s"$dir/snippets")
-          messages.write.mode("overwrite").parquet(s"$dir/messages")
-          // categories last: its _SUCCESS marks the snapshot complete for recovery
-          next.categories.write.mode("overwrite").parquet(s"$dir/categories")
-        }
+        val base = if (batchId == 0) initial else latestBelow(batchId).getOrElse(initial)
+        val (dispatched, messages) = dispatcher(base, batch)
+        // maintenance INSIDE the batch transaction: the swept state is
+        // what persists, so batch replay reproduces it (T4 streaming)
+        val next = maintenance(dispatched)
+        // materialize snapshots so state does not re-read mutated streams
+        val dir = s"$stateDir/$batchId"
+        next.docs.write.mode("overwrite").parquet(s"$dir/docs")
+        next.snippets.write.mode("overwrite").parquet(s"$dir/snippets")
+        messages.write.mode("overwrite").parquet(s"$dir/messages")
+        // categories last: its _SUCCESS marks the snapshot complete for recovery
+        next.categories.write.mode("overwrite").parquet(s"$dir/categories")
+        written = Some(batchId -> Seq(next.docs.schema, next.snippets.schema,
+          next.categories.schema))
         onBatch(batchId, loadState(batchId).get)
       }
       .start()

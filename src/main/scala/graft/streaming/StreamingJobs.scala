@@ -624,10 +624,13 @@ object StreamingJobs {
     // expensive probes run once per batch.
     def pin(df: DataFrame): DataFrame = { df.cache(); cached += df; df }
     // label each materialization phase in the UI/listeners (guide §1.5);
-    // thread-local, so AQE's captured-thread exchange jobs inherit it
+    // thread-local, so AQE's captured-thread exchange jobs inherit it. The
+    // caller's own description comes back after the phase.
     def phase[A](label: String)(f: => A): A = {
-      spark.sparkContext.setJobDescription(s"gate[$batchId] $label")
-      try f finally spark.sparkContext.setJobDescription(null)
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"gate[$batchId] $label")
+      try f finally sc.setJobDescription(outer)
     }
     try {
       // 1. exact within batch: min doc_id per text hash survives. ONE

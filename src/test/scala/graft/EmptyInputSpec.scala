@@ -250,6 +250,17 @@ class EmptyInputSpec extends SparkSpec {
     assert(Doremi.domainLossKn(emptyDocs).count() === 0)
   }
 
+  test("versionSummaries over no versions: zero rows, the same schema") {
+    val docs = spark.range(3).toDF("doc_id")
+    for (cur <- Seq(None, Some("v_0"))) {
+      val empty = graft.operators.Mutations.versionSummaries(Nil,
+        _ => fail("no version may be read"), cur)
+      assert(empty.count() === 0)
+      assert(empty.schema ===
+        graft.operators.Mutations.versionSummaries(Seq("v_0"), _ => docs, cur).schema)
+    }
+  }
+
   test("dispatch with an empty command batch is a no-op") {
     import spark.implicits._
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha", "Active"))

@@ -428,6 +428,27 @@ class SimilaritySpec extends SparkSpec {
     assert(ds.zip(ds.drop(1)).forall { case (a, b) => a >= b })
   }
 
+  test("kCenterSelect: a null embedding element reads the same on the driver fast path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def vec(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    val rows = Seq(
+      Row(0L, vec(1.0f, null, 0.5f)), // the seed row carries a null slot
+      Row(1L, vec(0.0f, 1.0f, 0.0f)),
+      Row(2L, vec(null, 0.2f, 1.0f)),
+      Row(3L, vec(0.7f, 0.7f, null)),
+      Row(4L, vec(-1.0f, 0.1f, 0.3f)))
+    val emb = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def select(budget: Long) = Similarity.kCenterSelect(emb, 4, driverRowBudget = budget)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val fast = select(Similarity.DriverCoresetRowBudget)
+    assert(fast.size === 4)
+    assert(fast === select(0L),
+      "kCenterSelect driver fast path diverged from the distributed loop on a null element")
+  }
+
   test("persisted IVF probe equals the self-contained ivfTopK and prunes partitions") {
     import org.apache.spark.sql.functions._
     val emb = graft.engine.Tables.embeddings(spark, sf0001)

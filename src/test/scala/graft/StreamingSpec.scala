@@ -520,6 +520,129 @@ class StreamingSpec extends SparkSpec {
       "Unknown action"))
   }
 
+  test("dispatch null keys: a null key is never deleted, a null upload category looks up nothing") {
+    import spark.implicits._
+    val docs0 = Seq(
+      (1L, Some("doc_a"), 1, "Cat1", "alpha beta", "Active"),
+      (2L, None: Option[String], 1, "Cat1", "orphan body", "Active"),
+      (3L, Some("doc_c"), 2, "Cat2", "gamma", "Active"))
+      .toDF("document_id", "document_name", "category_id", "category_name", "text", "document_status")
+    val cats0 = Seq((1, "Cat1"), (2, "Cat2")).toDF("category_id", "category_name")
+    val snippets0 = docs0.select(col("document_id"), col("document_name"),
+      col("category_id"), lit(1).as("snippet_id"), col("text").as("snippet_text"),
+      col("document_status"))
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*): Set[Seq[Any]] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    def messages(df: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
+      df.select("action_code", "message").as[(Int, String)].collect().toSet
+    val docCols = Seq("document_id", "document_name", "category_id", "category_name",
+      "document_status")
+
+    // a remove with a null name, a null category remove, a named remove and
+    // an upload whose category_id is null
+    val removes = Seq(
+      (0, None: Option[Long], None: Option[String], None: Option[Int], None: Option[String], None: Option[String]),
+      (0, None, Some("doc_a"), None, None, None),
+      (3, None, None, None, None, None),
+      (1, Some(4L), Some("doc_d"), None, None, Some("one two three four")))
+      .toDF("action_code", "document_id", "document_name", "category_id", "category_name", "text")
+    val (afterRemoves, removeMsgs) = CommandDispatch.dispatch(
+      EngineState(docs0, snippets0, cats0), removes)
+    assert(rows(afterRemoves.docs, docCols: _*) === Set(
+      Seq(2L, null, 1, "Cat1", "Active"),
+      Seq(3L, "doc_c", 2, "Cat2", "Active"),
+      Seq(4L, "doc_d", null, null, "Active")))
+    assert(rows(afterRemoves.snippets, "document_id", "document_name", "snippet_id") === Set(
+      Seq(2L, null, 1), Seq(3L, "doc_c", 1), Seq(4L, "doc_d", 1), Seq(4L, "doc_d", 2)))
+    assert(rows(afterRemoves.categories, "category_id", "category_name") ===
+      Set(Seq(1, "Cat1"), Seq(2, "Cat2")))
+    assert(messages(removeMsgs) === Set(
+      0 -> "Document null was removed", 0 -> "Document doc_a was removed",
+      3 -> "Category null was removed", 1 -> "Document doc_d was uploaded"))
+
+    // an empty remove set: a category add and a duplicate upload only
+    val noRemoves = Seq(
+      (2, None: Option[Long], None: Option[String], Some(3), Some("Cat3"), None: Option[String]),
+      (1, Some(5L), Some("doc_c"), Some(1), None, Some("dup name")))
+      .toDF("action_code", "document_id", "document_name", "category_id", "category_name", "text")
+    val (afterAdds, addMsgs) = CommandDispatch.dispatch(
+      EngineState(docs0, snippets0, cats0), noRemoves)
+    assert(rows(afterAdds.docs, docCols: _*) === rows(docs0, docCols: _*))
+    assert(afterAdds.snippets.count() === 3)
+    assert(rows(afterAdds.categories, "category_id", "category_name") ===
+      Set(Seq(1, "Cat1"), Seq(2, "Cat2"), Seq(3, "Cat3")))
+    assert(messages(addMsgs) === Set(
+      2 -> "Category Cat3 was added", 1 -> "Document doc_c already exists"))
+  }
+
+  test("a steady runStream batch runs at most 15 Spark jobs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val n = 200
+    val docs = (0 until n).map(i => (i.toLong, s"doc_$i", i % 5, s"Cat${i % 5}",
+        s"w$i x y z w$i x y z", "Active", if (i % 4 == 0) Some("2001-01-01") else None))
+      .toDF("document_id", "document_name", "category_id", "category_name", "text",
+        "document_status", "document_expiryDate")
+    docs.write.parquet(s"$dir/docs")
+    docs.select(col("document_id"), col("document_name"), col("category_id"),
+        lit(1).as("snippet_id"), col("text").as("snippet_text"), col("document_status"))
+      .write.parquet(s"$dir/snippets")
+    (0 until 5).map(c => (c, s"Cat$c")).toDF("category_id", "category_name")
+      .write.parquet(s"$dir/categories")
+    val initial = EngineState(spark.read.parquet(s"$dir/docs"),
+      spark.read.parquet(s"$dir/snippets"), spark.read.parquet(s"$dir/categories"))
+
+    // jobs of the stream's thread carry its batch description; a marker
+    // job run after the batch flushes the listener bus up to it
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d == "job-count marker") marker.countDown() else jobs.add(d)
+      }
+    }
+    val stream = MemoryStream[(Int, Option[Long], Option[String], Option[Int], Option[String],
+      Option[String], Option[String])]
+    val commands = stream.toDF().toDF(CommandDispatch.commandSchema.fieldNames.toSeq: _*)
+    @volatile var last: Option[EngineState] = None
+    val query = CommandDispatch.runStream(spark, commands, initial, s"$dir/state",
+      (_, st) => last = Some(st),
+      maintenance = CommandDispatch.expiryMaintenance(lit("2026-01-01")))
+    // every action code, a duplicate upload and a duplicate category
+    def batch(b: Int) = Seq(
+      (1, Some(1000L + b), Some(s"new_$b"), Some(1), None, Some("one two three four"), Some("2099-01-01")),
+      (1, Some(2000L + b), Some(s"doc_${b + 1}"), Some(2), None, Some("dup"), None),
+      (0, None, Some(s"doc_${b + 10}"), None, None, None, None),
+      (2, None, None, Some(100 + b), Some(s"Cat_new_$b"), None, None),
+      (2, None, None, Some(200 + b), Some("Cat1"), None, None),
+      (3, None, None, Some(100 + b - 1), None, None, None))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      try {
+        stream.addData(batch(0))
+        query.processAllAvailable()
+        stream.addData(batch(1))
+        query.processAllAvailable()
+      } finally query.stop()
+      spark.sparkContext.setJobDescription("job-count marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val steady = jobs.asScala.count(_.contains("batch = 1"))
+    assert(steady > 0, s"no job carried the batch description: ${jobs.asScala.toSeq}")
+    assert(steady <= 15, s"a steady batch ran $steady jobs")
+    // the snapshot read back with the written schemas reads as inferred
+    val st = last.get
+    Seq("docs" -> st.docs, "snippets" -> st.snippets, "categories" -> st.categories)
+      .foreach { case (t, df) =>
+        assert(df.schema === spark.read.parquet(s"$dir/state/1/$t").schema, t)
+      }
+  }
+
   test("flatMapGroupsWithState sessionization == batch sessionize once watermark closes") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_sess")
@@ -692,6 +815,20 @@ class StreamingSpec extends SparkSpec {
       (1L, "2024-01-01 10:00:00.0"), (2L, "2024-01-01 10:00:00.0"),
       (9L, "2024-01-01 15:00:00.0"),
       (1L, "2024-01-01 15:00:00.0"))) // the re-admission — bounded state
+  }
+
+  test("dedup gate batch: the caller's job description survives its phases") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_gate_desc")
+    val batch = Seq((1L, "a b c d e f", "en", "test", 11L), (2L, "g h i j k l", "en", "test", 11L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller description")
+    try {
+      StreamingJobs.dedupGateBatch(spark, batch, 0L, root.resolve("accepted").toString,
+        root.resolve("index").toString, root.resolve("rejected").toString, 0.5)
+      assert(sc.getLocalProperty("spark.job.description") === "caller description")
+    } finally sc.setJobDescription(null)
   }
 
   test("streaming dedup gate: exact + near dups rejected within and across batches") {
