@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Atomic snapshot store (SURVEY §7.4): every mutation writes a NEW
@@ -18,12 +19,32 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
   private val currentPtr = Paths.get(root, "CURRENT")
 
+  /** Schema of every version THIS instance published with [[publish]],
+    * by version name. A published version directory never changes, so
+    * the schema its writer knew stays exact for as long as it exists. */
+  private val published = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   /** Highest published version, or None before the first publish. */
   def currentVersion(): Option[String] =
     if (Files.exists(currentPtr)) Some(Files.readString(currentPtr).trim) else None
 
-  /** Read the published snapshot. */
-  def read(): DataFrame = spark.read.parquet(currentPath())
+  /** Read the published snapshot. When this instance published the
+    * current version, the read takes the schema the publish wrote and
+    * launches no job; otherwise (another instance or process published
+    * it, or [[publishVia]] wrote it) Spark infers the schema from the
+    * parquet footers, which is one small job. Both give the same schema:
+    * parquet keeps the writer's schema, and the file source makes every
+    * field nullable either way. */
+  def read(): DataFrame = readVersion(currentVersion().getOrElse(
+    throw new IllegalStateException(s"no published snapshot under $root")))
+
+  private def readVersion(version: String): DataFrame = {
+    val path = s"$root/$version"
+    Option(published.get(version)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Filesystem path of the published version — the entry point for
     * multi-table snapshots written via [[publishVia]], whose readers
@@ -47,8 +68,11 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * never touches: claiming the version DIRECTORY itself would not work,
     * because Spark's overwrite-mode write deletes and re-creates the
     * target directory at job start, reopening the race window mid-write. */
-  def publish(df: DataFrame): String =
-    publishVia(v => df.write.mode("overwrite").parquet(v))
+  def publish(df: DataFrame): String = {
+    val version = publishVia(v => df.write.mode("overwrite").parquet(v))
+    published.put(version, df.schema)
+    version
+  }
 
   /** [[publish]] with a caller-supplied layout: `write` receives the
     * claimed version DIRECTORY path and may produce any structure under
@@ -111,7 +135,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     require(n <= current, s"version $version was never published (current is v_$current)")
     require(Files.isDirectory(Paths.get(root, version)),
       s"version $version is outside the retention window (vacuumed) or never completed")
-    spark.read.parquet(s"$root/$version")
+    readVersion(version)
   }
 
   /** Roll back by RE-PUBLISHING an old version's content as the NEXT
@@ -157,6 +181,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
           f.isDirectory && f.getName.startsWith("v_") &&
             versionOf(f.getName).exists(_ < cutoff))
         old.foreach(deleteRecursively)
+        old.foreach(f => published.remove(f.getName))
         // numeric version order: lexicographic would put v_10 before v_2
         old.map(_.getName).toSeq
           .sortBy(n => versionOf(n).getOrElse(Long.MaxValue))

@@ -32,6 +32,34 @@ import org.apache.spark.sql.functions._
   */
 object BinaryIngest {
 
+  /** Tasks per core of the upload scan (see [[scanUploads]]). */
+  private val ScanTasksPerCore = 2
+
+  /** The binaryFile scan both entry points share: (path, n_bytes,
+    * content) rows of every upload under `dir` matching `glob`, in at
+    * most `ScanTasksPerCore` x `defaultParallelism` partitions.
+    *
+    * Spark charges every file a 4 MB open cost and caps a split at
+    * 128 MB, so past 32 small uploads per core it makes one split per 32
+    * uploads: 1,000 small PDFs arrive as about 32 splits on a 4-core
+    * host. The extraction, document build and snapshot write above the
+    * scan all run in that one stage.
+    * Every task of it deserializes the session's Hadoop configuration
+    * (over a thousand entries) before it starts, a fixed cost that 32
+    * tasks pay 32 times. The narrow coalesce (no shuffle) cuts that to
+    * two tasks per core. Two, not one: the per-document cost varies by
+    * orders of magnitude (AES-256 key derivation, OCR), and with one
+    * task per core the expensive uploads land unevenly and leave cores
+    * idle. Where Spark already makes that few splits the coalesce keeps
+    * its split count. */
+  private def scanUploads(spark: SparkSession, dir: String, glob: String): DataFrame =
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", glob)
+      .option("recursiveFileLookup", "true")
+      .load(dir)
+      .select(col("path"), col("length").as("n_bytes"), col("content"))
+      .coalesce(ScanTasksPerCore * spark.sparkContext.defaultParallelism)
+
   /** Scan a directory of binary uploads. `extractor` maps the raw bytes
     * column to text; the caller derives ids/attrs from `path`. `glob`
     * selects the upload extension (pre-extracted .txt by default; a PDF
@@ -39,12 +67,8 @@ object BinaryIngest {
   def readBinaryDocs(spark: SparkSession, dir: String,
       extractor: Column => Column = c => decode(c, "UTF-8"),
       glob: String = "*.txt"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(col("path"), col("length").as("n_bytes"),
-        extractor(col("content")).as("text"))
+    scanUploads(spark, dir, glob)
+      .select(col("path"), col("n_bytes"), extractor(col("content")).as("text"))
 
   /** Text-layer extractor for UNCOMPRESSED PDF content streams — a REAL
     * container format through the extractor slot, proving the seam takes
@@ -66,6 +90,63 @@ object BinaryIngest {
       " ")
 
   // ------------------------------------------------- full PDF extraction
+
+  // The parser's patterns, compiled once per JVM: [[pdfExtract]] and its
+  // helpers run per document, several of them per stream, font or CMap
+  // block. A Regex is immutable and each find creates its own matcher, so
+  // executor threads share these safely.
+
+  // standard-security handler fields (hex strings may wrap lines)
+  private val UHexRe = """/U\s*<([0-9A-Fa-f\s]+)>""".r
+  private val UeHexRe = """/UE\s*<([0-9A-Fa-f\s]+)>""".r
+  private val OHexRe = """/O\s*<([0-9A-Fa-f\s]+)>""".r
+  private val IdHexRe = """/ID\s*\[\s*<([0-9A-Fa-f\s]+)>""".r
+  private val PermsRe = """/P\s+(-?\d+)""".r
+  private val WhitespaceRe = """\s""".r
+  private val ObjHeaderRe = """(\d+)\s+(\d+)\s+obj\b""".r
+  // \d++ (possessive) prevents partial-number backtracking: with a
+  // greedy \d+ against "/Length 10 0 R" the engine retries the capture
+  // as "1" so the indirect-ref lookahead passes, yielding a bogus direct
+  // length of 1 and silently truncating the stream.
+  private val DirectLengthRe = """/Length\s+(\d++)(?!\s+\d+\s+R)""".r
+
+  private val DifferencesRe = """/Differences\s*\[([^\]]*)\]""".r
+  // /Differences array token. The integer token is bounded to 3 digits:
+  // codes above 255 are meaningless for a simple font, and an unbounded
+  // toInt on adversarial input (`/Differences [ 99999999999 /a ]`) would
+  // throw inside the extractor UDF — the crash-never posture bounds it in
+  // the regex (longer digit runs set code = -1, skipping names until a
+  // valid code appears, rather than aborting the document).
+  // The name branch accepts ANY legal PDF name token (every regular
+  // character — including hyphens and #XX escapes), not just
+  // [A-Za-z0-9._]: a skipped-but-present name must still ADVANCE the
+  // code counter or every later name in the array binds one code too
+  // low, mis-mapping glyphs instead of dropping one (ADVICE r11);
+  // resolvable-vs-drop is GlyphList.toUnicode's decision alone.
+  private val DiffTokenRe = """(?<![\d])(\d{1,3})(?![\d])|(\d{4,})|/([^\s\[\]<>/()]++)""".r
+  private val NameEscapeRe = """#([0-9A-Fa-f]{2})""".r
+
+  // font resources: object bodies, flat /Font dicts and their references
+  private val ObjBodyRe = """(?s)(\d{1,9})\s+\d+\s+obj\b(.*?)endobj""".r
+  private val FontDictRe = """/Font\s*<<([^<>]*)>>""".r
+  private val FontRefRe = """/([^\s\[\]<>/()]++)\s+(\d{1,9})\s+\d+\s+R""".r
+  private val EncodingRefRe = """/Encoding\s+(\d{1,9})\s+\d+\s+R""".r
+  private val ToUnicodeRefRe = """/ToUnicode\s+(\d{1,9})\s+\d+\s+R""".r
+
+  // ToUnicode CMap blocks and entries
+  private val HexItemRe = """<([0-9A-Fa-f]+)>""".r
+  private val BfcharBlockRe = """(?s)beginbfchar(.*?)endbfchar""".r
+  private val BfcharPairRe = """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]+)>""".r
+  private val BfrangeBlockRe = """(?s)beginbfrange(.*?)endbfrange""".r
+  private val BfrangeArrayRe =
+    """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]{1,8})>\s*\[((?:\s*<[0-9A-Fa-f]+>)*)\s*\]""".r
+  private val BfrangeScalarRe =
+    """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]+)>""".r
+
+  /** First match of a `/Key <hex>` pattern, decoded to bytes. */
+  private def hexField(re: scala.util.matching.Regex, raw: String): Option[Array[Byte]] =
+    re.findFirstMatchIn(raw)
+      .map(m => PdfCrypto.fromHex(WhitespaceRe.replaceAllIn(m.group(1), "")))
 
   /** REAL compressed-stream PDF text extraction in pure JDK — the
     * "deployment drop-in" the r3/r4 verdicts carried as a gap, landed
@@ -210,10 +291,8 @@ object BinaryIngest {
       if (!raw.contains("/AESV3")) None
       else try {
         for {
-          u <- """/U\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-          ue <- """/UE\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
+          u <- hexField(UHexRe, raw)
+          ue <- hexField(UeHexRe, raw)
           k <- PdfCrypto.fileKeyR6(u, ue)
         } yield k
       } catch { case _: Exception => None }
@@ -221,22 +300,18 @@ object BinaryIngest {
       if (v5Key.isDefined || !raw.contains("/Encrypt")) None
       else try {
         for {
-          o <- """/O\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
+          o <- hexField(OHexRe, raw)
           // .toLong.toInt: several producers write /P as the UNSIGNED
           // 32-bit decimal (4294963392) instead of the negative two's
           // complement — the truncation recovers the intended bits either
           // way, and the outer try keeps any other malformed field on the
           // extract-empty path, never an executor crash
-          p <- """/P\s+(-?\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong.toInt)
-          id0 <- """/ID\s*\[\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
+          p <- PermsRe.findFirstMatchIn(raw).map(_.group(1).toLong.toInt)
+          id0 <- hexField(IdHexRe, raw)
           key = PdfCrypto.fileKey(o, p, id0)
           // wrong/absent password: /U's first 16 bytes won't reproduce
-          uOk = """/U\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-            .forall(u => java.util.Arrays.equals(u.take(16),
-              PdfCrypto.computeU(key, id0).take(16)))
+          uOk = hexField(UHexRe, raw).forall(u =>
+            java.util.Arrays.equals(u.take(16), PdfCrypto.computeU(key, id0).take(16)))
           k <- if (uOk) Some(key) else None
         } yield k
       } catch { case _: Exception => None }
@@ -248,7 +323,7 @@ object BinaryIngest {
     // and the per-font ToUnicode resolution needs stream contents keyed
     // by object number on every path — one linear regex pass either way
     val objHeaders: IndexedSeq[(Int, Int, Int)] =
-      """(\d+)\s+(\d+)\s+obj\b""".r.findAllMatchIn(raw)
+      ObjHeaderRe.findAllMatchIn(raw)
         .map(m => (m.start, m.group(1).toInt, m.group(2).toInt)).toIndexedSeq
     // pass 1 collects decoded stream CONTENTS in file order (tagged with
     // the owning object number); text runs are extracted afterwards,
@@ -276,12 +351,7 @@ object BinaryIngest {
           // 1/256 odds per stream). Fall back to endstream-relative
           // trimming only for an INDIRECT length ("N 0 R"), stripping one
           // optional EOL (CRLF or lone LF/CR) per spec.
-          // \d++ (possessive) prevents partial-number backtracking: with a
-          // greedy \d+ against "/Length 10 0 R" the engine retries the
-          // capture as "1" so the indirect-ref lookahead passes, yielding a
-          // bogus direct length of 1 and silently truncating the stream.
-          val direct = """/Length\s+(\d++)(?!\s+\d+\s+R)""".r
-            .findFirstMatchIn(dict).map(_.group(1).toInt)
+          val direct = DirectLengthRe.findFirstMatchIn(dict).map(_.group(1).toInt)
           var dataEnd = direct match {
             case Some(len) if dataStart + len <= endIdx => dataStart + len
             case _ =>
@@ -354,22 +424,9 @@ object BinaryIngest {
     * 0..255 are ignored (simple fonts are single-byte). */
   private[graft] def parseDifferences(raw: String): Map[Int, String] = {
     val out = scala.collection.mutable.Map.empty[Int, String]
-    // integer token bounded to 3 digits: codes above 255 are meaningless
-    // for a simple font, and an unbounded toInt on adversarial input
-    // (`/Differences [ 99999999999 /a ]`) would throw inside the
-    // extractor UDF — the crash-never posture bounds it in the regex
-    // (longer digit runs set code = -1, skipping names until a valid
-    // code appears, rather than aborting the document).
-    // The name branch accepts ANY legal PDF name token (every regular
-    // character — including hyphens and #XX escapes), not just
-    // [A-Za-z0-9._]: a skipped-but-present name must still ADVANCE the
-    // code counter or every later name in the array binds one code too
-    // low, mis-mapping glyphs instead of dropping one (ADVICE r11);
-    // resolvable-vs-drop is GlyphList.toUnicode's decision alone.
-    val tok = """(?<![\d])(\d{1,3})(?![\d])|(\d{4,})|/([^\s\[\]<>/()]++)""".r
-    """/Differences\s*\[([^\]]*)\]""".r.findAllMatchIn(raw).foreach { m =>
+    DifferencesRe.findAllMatchIn(raw).foreach { m =>
       var code = -1
-      tok.findAllMatchIn(m.group(1)).foreach { t =>
+      DiffTokenRe.findAllMatchIn(m.group(1)).foreach { t =>
         if (t.group(1) != null) code = t.group(1).toInt
         else if (t.group(2) != null) code = -1 // out-of-range integer token
         else if (code >= 0 && code <= 255) {
@@ -388,7 +445,7 @@ object BinaryIngest {
     * literal `#` simply fails the glyph-list lookup downstream. */
   private[graft] def decodePdfName(n: String): String =
     if (!n.contains('#')) n
-    else """#([0-9A-Fa-f]{2})""".r.replaceAllIn(n, m =>
+    else NameEscapeRe.replaceAllIn(n, m =>
       java.util.regex.Matcher.quoteReplacement(
         Integer.parseInt(m.group(1), 16).toChar.toString))
 
@@ -418,27 +475,24 @@ object BinaryIngest {
   private[graft] def parseFontMaps(raw: String, streamByObj: Map[Int, String])
       : (Map[String, Map[Int, String]], Map[String, Map[Int, String]]) = {
     val objBody: Map[Int, String] =
-      """(?s)(\d{1,9})\s+\d+\s+obj\b(.*?)endobj""".r.findAllMatchIn(raw)
+      ObjBodyRe.findAllMatchIn(raw)
         .map(m => m.group(1).toInt -> m.group(2)).toMap
     val diffsOut = scala.collection.mutable.Map.empty[String, Map[Int, String]]
     val cmapOut = scala.collection.mutable.Map.empty[String, Map[Int, String]]
-    """/Font\s*<<([^<>]*)>>""".r.findAllMatchIn(raw).foreach { fm =>
-      """/([^\s\[\]<>/()]++)\s+(\d{1,9})\s+\d+\s+R""".r
-        .findAllMatchIn(fm.group(1)).foreach { m =>
-          val name = decodePdfName(m.group(1))
-          objBody.get(m.group(2).toInt).foreach { fd =>
-            val encText = """/Encoding\s+(\d{1,9})\s+\d+\s+R""".r
-              .findFirstMatchIn(fd)
-              .flatMap(e => objBody.get(e.group(1).toInt)).getOrElse("")
-            val d = parseDifferences(fd + " " + encText)
-            if (d.nonEmpty) diffsOut(name) = diffsOut.getOrElse(name, Map.empty) ++ d
-            val cm = """/ToUnicode\s+(\d{1,9})\s+\d+\s+R""".r
-              .findFirstMatchIn(fd)
-              .flatMap(t => streamByObj.get(t.group(1).toInt))
-              .map(parseToUnicode).getOrElse(Map.empty)
-            if (cm.nonEmpty) cmapOut(name) = cmapOut.getOrElse(name, Map.empty) ++ cm
-          }
+    FontDictRe.findAllMatchIn(raw).foreach { fm =>
+      FontRefRe.findAllMatchIn(fm.group(1)).foreach { m =>
+        val name = decodePdfName(m.group(1))
+        objBody.get(m.group(2).toInt).foreach { fd =>
+          val encText = EncodingRefRe.findFirstMatchIn(fd)
+            .flatMap(e => objBody.get(e.group(1).toInt)).getOrElse("")
+          val d = parseDifferences(fd + " " + encText)
+          if (d.nonEmpty) diffsOut(name) = diffsOut.getOrElse(name, Map.empty) ++ d
+          val cm = ToUnicodeRefRe.findFirstMatchIn(fd)
+            .flatMap(t => streamByObj.get(t.group(1).toInt))
+            .map(parseToUnicode).getOrElse(Map.empty)
+          if (cm.nonEmpty) cmapOut(name) = cmapOut.getOrElse(name, Map.empty) ++ cm
         }
+      }
     }
     (diffsOut.toMap, cmapOut.toMap)
   }
@@ -453,32 +507,26 @@ object BinaryIngest {
     * the parser). */
   private[graft] def parseToUnicode(cm: String): Map[Int, String] = {
     val out = scala.collection.mutable.Map.empty[Int, String]
-    val hexItem = """<([0-9A-Fa-f]+)>""".r
     def hexStr(h: String): String = {
       val p = if (h.length % 2 == 1) h + "0" else h
       new String(p.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
         java.nio.charset.StandardCharsets.UTF_16BE)
     }
-    """(?s)beginbfchar(.*?)endbfchar""".r.findAllMatchIn(cm).foreach { blk =>
-      """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]+)>""".r
-        .findAllMatchIn(blk.group(1)).foreach { m =>
-          out(java.lang.Long.parseLong(m.group(1), 16).toInt) = hexStr(m.group(2))
-        }
+    BfcharBlockRe.findAllMatchIn(cm).foreach { blk =>
+      BfcharPairRe.findAllMatchIn(blk.group(1)).foreach { m =>
+        out(java.lang.Long.parseLong(m.group(1), 16).toInt) = hexStr(m.group(2))
+      }
     }
-    val arrRe =
-      """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]{1,8})>\s*\[((?:\s*<[0-9A-Fa-f]+>)*)\s*\]""".r
-    val scalarRe =
-      """<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]{1,8})>\s*<([0-9A-Fa-f]+)>""".r
-    """(?s)beginbfrange(.*?)endbfrange""".r.findAllMatchIn(cm).foreach { blk =>
+    BfrangeBlockRe.findAllMatchIn(cm).foreach { blk =>
       val b = blk.group(1)
-      arrRe.findAllMatchIn(b).foreach { m =>
+      BfrangeArrayRe.findAllMatchIn(b).foreach { m =>
         val lo = java.lang.Long.parseLong(m.group(1), 16).toInt
-        hexItem.findAllMatchIn(m.group(3)).map(x => hexStr(x.group(1)))
+        HexItemRe.findAllMatchIn(m.group(3)).map(x => hexStr(x.group(1)))
           .zipWithIndex.foreach { case (d, i) => out(lo + i) = d }
       }
       // strip array entries first: the scalar regex would otherwise match
       // three consecutive items INSIDE an array's brackets
-      scalarRe.findAllMatchIn(arrRe.replaceAllIn(b, " ")).foreach { m =>
+      BfrangeScalarRe.findAllMatchIn(BfrangeArrayRe.replaceAllIn(b, " ")).foreach { m =>
         val lo = java.lang.Long.parseLong(m.group(1), 16)
         val hi = java.lang.Long.parseLong(m.group(2), 16)
         val base = hexStr(m.group(3))
@@ -501,7 +549,7 @@ object BinaryIngest {
     * An odd trailing nibble pads with 0 per the PDF spec. */
   private def decodeHex(h: String, cmap: Map[Int, String],
       diffs: Map[Int, String]): String = {
-    val clean = h.replaceAll("\\s", "")
+    val clean = WhitespaceRe.replaceAllIn(h, "")
     val padded = if (clean.length % 2 == 1) clean + "0" else clean
     if (padded.isEmpty) ""
     else if (cmap.nonEmpty)
@@ -675,11 +723,8 @@ object BinaryIngest {
       extractor: Column => Column = c => decode(c, "UTF-8"),
       ocr: Column => Column = ocrStub,
       glob: String = "*.txt"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(col("path"), col("length").as("n_bytes"),
+    scanUploads(spark, dir, glob)
+      .select(col("path"), col("n_bytes"),
         extractor(col("content")).as("text_layer"), col("content"))
       // ALL-whitespace detection — Spark trim() strips spaces only, so a
       // newline-only text layer would dodge a trim-based check

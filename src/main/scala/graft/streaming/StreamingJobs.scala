@@ -623,6 +623,11 @@ object StreamingJobs {
     // on every one of the three publish actions below — cache them so the
     // expensive probes run once per batch.
     def pin(df: DataFrame): DataFrame = { df.cache(); cached += df; df }
+    // The batch's local checkpoints hold executor blocks that nothing
+    // reads once the publishes below are done: release them when the
+    // batch ends instead of leaving them to the ContextCleaner's GC.
+    val checkpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def checkpointed(df: DataFrame): DataFrame = { checkpoints += df; df }
     // label each materialization phase in the UI/listeners (guide §1.5);
     // thread-local, so AQE's captured-thread exchange jobs inherit it. The
     // caller's own description comes back after the phase.
@@ -646,13 +651,12 @@ object StreamingJobs {
       // the same data). The checkpoint pins batch+witness ONCE; the cost
       // is one batch-sized materialization, per-batch state a gate holds
       // anyway. (A cache was tried here in round 7 for deterministic
-      // release; the checkpoint's RDD blocks are instead freed by the
-      // ContextCleaner, bounded by the 60s periodicGC floor.)
+      // release; the checkpoint is released in the `finally` below.)
       val wx = org.apache.spark.sql.expressions.Window.partitionBy(col("xxh"))
-      val ranked = phase("stage1 window")(
+      val ranked = checkpointed(phase("stage1 window")(
         batch.withColumn("xxh", xxhash64(col("text")))
           .withColumn("__witness", min(col("doc_id")).over(wx))
-          .localCheckpoint())
+          .localCheckpoint()))
       val exactBatchRej = ranked.filter(col("doc_id") =!= col("__witness"))
         .select(col("doc_id"), lit("exact_batch").as("reason"),
           col("__witness").as("witness"))
@@ -682,9 +686,9 @@ object StreamingJobs {
       // the public entry points each would re-shingle (and re-sign) the
       // batch from text. Exact mode never reads `sig`, so it skips the
       // 32-permutation signing outright.
-      val sigs = phase("shingle")(
+      val sigs = checkpointed(phase("shingle")(
         if (exactPairs) Dedup.shingledIndexOf(live)
-        else Dedup.signedIndexOf(live))
+        else Dedup.signedIndexOf(live)))
 
       // 3 + 4. near-dup vs corpus, then within batch. Exact mode FUSES the
       // two into one postings join ([[Dedup.gateFusedExactPairs]]): the
@@ -697,9 +701,9 @@ object StreamingJobs {
       val (nearCorpusRej, pairs) =
         if (exactPairs) {
           val idx = if (exists(spark, indexDir)) Some(indexDir) else None
-          val fused = phase("fused pairs")(
+          val fused = checkpointed(phase("fused pairs")(
             Dedup.gateFusedExactPairs(spark, idx, sigs, threshold)
-              .localCheckpoint())
+              .localCheckpoint()))
           // pinned (round 14): this tiny key list is read by FOUR consumers
           // (live's anti-join, both pair-list anti-joins, the rejected
           // write) and each evaluation re-ran the groupBy shuffle over the
@@ -731,7 +735,7 @@ object StreamingJobs {
         .filter(col("id") =!= col("label"))
         .select(col("id").as("doc_id"), lit("near_dup_batch").as("reason"),
           col("label").as("witness")))
-      live = phase("survivors")(
+      live = checkpointed(phase("survivors")(
         live.join(nearBatchRej.select("doc_id"), Seq("doc_id"), "left_anti")
           // EAGER materialization before any publish action. This is load-
           // bearing for correctness, not just speed: the accepted write below
@@ -740,7 +744,7 @@ object StreamingJobs {
           // batch's own rows are already "in the corpus" — the exact_corpus
           // anti-join would then erase the batch from the index append. With
           // the survivors pinned here, the three writes replay nothing.
-          .localCheckpoint())
+          .localCheckpoint()))
 
       // publish: rejections audit, accepted rows, index signatures — each
       // write stays atomic-per-directory and none replays the probes.
@@ -759,9 +763,20 @@ object StreamingJobs {
         if (exactPairs) Dedup.appendIndexPostings(finalIdx, indexDir)
         else Dedup.appendIndexSigs(finalIdx, indexDir))
     } finally {
-      cached.foreach(_.unpersist(blocking = false)); ()
+      cached.foreach(_.unpersist(blocking = false))
+      checkpoints.foreach(releaseCheckpoint)
     }
   }
+
+  /** Free the blocks behind a `localCheckpoint()`ed frame: its plan is
+    * one scan of the checkpointed RDD, whose persisted blocks ARE the
+    * checkpoint. Spark warns that the truncated lineage cannot be
+    * recomputed; callers release a frame only once nothing reads it. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case _ =>
+    }
 
   private lazy val gateDir: String = Dedup.processTempDir("graft_dedup_gate")
 

@@ -113,6 +113,123 @@ class EngineSpec extends SparkSpec {
     assert(store.readAsOf("v_3").count() === 2)
   }
 
+  /** Jobs `work` launches, counted by a listener; a marker job run after
+    * it flushes the asynchronous listener bus up to the count. */
+  private def jobsOf[A](work: => A): (Int, A) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "jobsOf marker"))
+          marker.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = work
+      sc.setJobDescription("jobsOf marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshot reads after a publish take its schema: no job, the schema Spark infers") {
+    import graft.operators.Ingest
+    import spark.implicits._
+    val words = (1 to 700).map(i => s"w$i").mkString(" ") // two pages
+    val docs = Seq((1L, "en", "a.pdf", words), (7L, "und", "b.pdf", "short text"),
+        (9L, "en", "c.pdf", null))
+      .toDF("doc_id", "lang", "source", "text")
+    val cats = Seq((1, "one"), (2, "two")).toDF("category_id", "category_name")
+    val built = Ingest.buildDocuments(docs, cats)
+    val root = Files.createTempDirectory("graft_snap_schema").toString
+    val store = new Snapshot(spark, root)
+    val v0 = store.publish(built)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val inferred = spark.read.parquet(s"$root/$v0")
+    // the shape the reuse must survive: nested arrays, a map and a date
+    assert(inferred.schema("pages").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    assert(inferred.schema("document_metadata").dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+    assert(inferred.schema("document_expiryDate").dataType === org.apache.spark.sql.types.DateType)
+    val (jobs, (read, asOf)) = jobsOf((store.read(), store.readAsOf(v0)))
+    assert(jobs === 0, "a read straight after publish inferred the schema")
+    assert(read.schema === inferred.schema && asOf.schema === inferred.schema)
+    assert(rows(read) === rows(inferred) && rows(asOf) === rows(inferred))
+
+    // another instance on the same root did not publish v0: it infers,
+    // and reads the same schema and rows
+    val other = new Snapshot(spark, root)
+    val (otherJobs, otherRead) = jobsOf(other.read())
+    assert(otherJobs > 0)
+    assert(otherRead.schema === inferred.schema && rows(otherRead) === rows(inferred))
+    // a version the other instance published reads correctly through the
+    // first (which never saw it) and through the publisher
+    val v1 = other.publish(built.filter($"document_id" =!= 7L).drop("document_metadata"))
+    assert(store.read().schema === spark.read.parquet(s"$root/$v1").schema)
+    assert(store.read().count() === 2 && other.read().count() === 2)
+    // rollback re-publishes v0 through its recorded schema; every version
+    // still reads as written
+    val v2 = store.rollback(v0)
+    assert(v2 === "v_2")
+    assert(store.read().schema === inferred.schema && rows(store.read()) === rows(inferred))
+    assert(store.readAsOf(v1).columns.toSeq === other.readAsOf(v1).columns.toSeq)
+    assert(!store.readAsOf(v1).columns.contains("document_metadata"))
+    assert(rows(store.readAsOf(v0)) === rows(inferred))
+    assert(rows(other.read()) === rows(inferred))
+  }
+
+  test("upload scan: many splits coalesce to two tasks per core; text matches the driver") {
+    import graft.sources.{BinaryIngest, OcrEngine}
+    val dir = Files.createTempDirectory("graft_scan_cap")
+    val kinds: Seq[String => Array[Byte]] = Seq(BinaryIngest.buildPdf, BinaryIngest.buildPdfCid,
+      OcrEngine.buildPdfScanned, BinaryIngest.buildPdfEncrypted)
+    (0 until 40).foreach { i =>
+      Files.write(dir.resolve(f"doc$i%03d.pdf"), kinds(i % kinds.size)(s"upload $i says hello"))
+    }
+    val cap = 2 * spark.sparkContext.defaultParallelism
+    def sparkSplits(d: java.nio.file.Path): Int =
+      spark.read.format("binaryFile").option("pathGlobFilter", "*.pdf").load(d.toString)
+        .rdd.getNumPartitions
+    def byFile(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.select("path", "text").collect()
+        .map(r => r.getString(0).split('/').last -> r.getString(1)).toMap
+    def onDriver(name: String): String = {
+      val bytes = Files.readAllBytes(dir.resolve(name))
+      val layer = BinaryIngest.pdfExtract(bytes)
+      if (layer.replaceAll("\\s", "").isEmpty) OcrEngine.ocrExtractPdf(bytes) else layer
+    }
+    // a smaller split size puts every upload in its own split
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1m")
+    try {
+      assert(sparkSplits(dir) > cap)
+      val plain = BinaryIngest.readBinaryDocs(spark, dir.toString,
+        BinaryIngest.pdfTextExtractorFull, glob = "*.pdf")
+      val ocr = BinaryIngest.readWithOcrFallback(spark, dir.toString,
+        BinaryIngest.pdfTextExtractorFull, OcrEngine.ocrExtractor, glob = "*.pdf")
+      assert(plain.rdd.getNumPartitions <= cap && ocr.rdd.getNumPartitions <= cap)
+      val (gotPlain, gotOcr) = (byFile(plain), byFile(ocr))
+      assert(gotOcr.size === 40 && gotPlain.keySet === gotOcr.keySet)
+      gotOcr.foreach { case (name, text) =>
+        assert(text === onDriver(name), name)
+        assert(gotPlain(name) === BinaryIngest.pdfExtract(Files.readAllBytes(dir.resolve(name))))
+      }
+      assert(gotOcr.values.count(_.nonEmpty) === 40)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // a dir with few uploads keeps Spark's own split count
+    val few = Files.createTempDirectory("graft_scan_few")
+    (0 until 3).foreach(i => Files.write(few.resolve(s"doc$i.pdf"), BinaryIngest.buildPdf(s"doc $i")))
+    assert(sparkSplits(few) <= cap)
+    assert(BinaryIngest.readBinaryDocs(spark, few.toString, glob = "*.pdf").rdd.getNumPartitions ===
+      sparkSplits(few))
+  }
+
   test("bucketed tables make the fact join shuffle-free (co-located join)") {
     val orders = spark.read.parquet(s"$sf0001/orders.parquet")
     val lineitem = spark.read.parquet(s"$sf0001/lineitem.parquet")

@@ -831,6 +831,29 @@ class StreamingSpec extends SparkSpec {
     } finally sc.setJobDescription(null)
   }
 
+  test("dedup gate batch: a finished batch leaves none of its RDDs in block storage") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def held: Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet ++ sc.getPersistentRDDs.keySet
+    val textA = (1 to 30).map(i => s"a$i").mkString(" ")
+    val textB = (1 to 30).map(i => s"b$i").mkString(" ")
+    def batch(ids: Long*) = ids.map(id => (id, if (id % 2 == 0) textA else textB, "en", "test", 90L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    Seq(false, true).foreach { exact =>
+      val root = Files.createTempDirectory("graft_gate_blocks")
+      val before = held
+      // batch 1 meets the corpus batch 0 accepted: every step has input
+      Seq(batch(1L, 2L, 4L) -> 0L, batch(3L, 6L, 8L) -> 1L).foreach { case (b, id) =>
+        StreamingJobs.dedupGateBatch(spark, b, id, root.resolve("accepted").toString,
+          root.resolve("index").toString, root.resolve("rejected").toString, 0.5,
+          exactPairs = exact)
+      }
+      assert(spark.read.parquet(root.resolve("accepted").toString).count() === 2)
+      val left = held -- before
+      assert(left.isEmpty, s"exactPairs=$exact left RDDs $left in storage")
+    }
+  }
+
   test("streaming dedup gate: exact + near dups rejected within and across batches") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_dedup_gate")

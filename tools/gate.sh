@@ -5,11 +5,13 @@ set -e
 cd "$(dirname "$0")/.."
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
-echo "=== pipeline benchmark (checks + one short command_stream run) ==="
+echo "=== pipeline benchmark (checks + one short run per workload) ==="
 python3 perfbench/test_run.py
-python3 perfbench/run.py --workload command_stream --seed 1 --seconds 10 --trace 0 \
-  > /tmp/gate_perfbench.log 2>&1 || { tail -20 /tmp/gate_perfbench.log; exit 1; }
-tail -1 /tmp/gate_perfbench.log
+for w in command_stream pdf_ingest; do
+  python3 perfbench/run.py --workload $w --seed 1 --seconds 10 --trace 0 \
+    > /tmp/gate_perfbench_$w.log 2>&1 || { tail -20 /tmp/gate_perfbench_$w.log; exit 1; }
+  tail -1 /tmp/gate_perfbench_$w.log
+done
 echo "=== smoke (t1) ==="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep '\[smoke\]'
 echo "=== oracle (t2, sf0.01) ==="
