@@ -28,6 +28,14 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
   def currentVersion(): Option[String] =
     if (Files.exists(currentPtr)) Some(Files.readString(currentPtr).trim) else None
 
+  /** The number `n` of a version name `v_<n>`; None for any other name. */
+  private def versionNumber(name: String): Option[Long] =
+    scala.util.Try(name.stripPrefix("v_").toLong).toOption
+
+  /** Number of the published version, or None before the first publish. */
+  private def currentNumber(): Option[Long] = currentVersion().map(v => versionNumber(v)
+    .getOrElse(throw new NumberFormatException(s"malformed CURRENT pointer '$v' under $root")))
+
   /** Read the published snapshot. When this instance published the
     * current version, the read takes the schema the publish wrote and
     * launches no job; otherwise (another instance or process published
@@ -82,7 +90,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * readable at different versions). Same claim/swap protocol as
     * [[publish]]. */
   def publishVia(write: String => Unit): String = {
-    val next = "v_" + (currentVersion().map(_.stripPrefix("v_").toLong + 1).getOrElse(0L))
+    val next = "v_" + currentNumber().map(_ + 1).getOrElse(0L)
     Files.createDirectories(Paths.get(root))
     Files.createFile(Paths.get(root, next + ".claim")) // throws FileAlreadyExistsException on a lost race
     write(s"$root/$next")
@@ -112,14 +120,16 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * orphans and not history). Versions pruned by [[vacuum]] no longer
     * appear — retention bounds time travel, same as any table format. */
   def versions(): Seq[String] = {
-    val current = currentVersion().map(_.stripPrefix("v_").toLong).getOrElse(-1L)
-    def versionOf(name: String): Option[Long] =
-      scala.util.Try(name.stripPrefix("v_").toLong).toOption
-    Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v_") &&
-        versionOf(f.getName).exists(_ <= current))
-      .map(_.getName).toSeq.sortBy(n => versionOf(n).getOrElse(Long.MaxValue))
+    val current = currentNumber().getOrElse(-1L)
+    versionDirs().filter(_._2 <= current).sortBy(_._2).map(_._1.getName).toSeq
   }
+
+  /** Every `v_<n>` directory under the root with its number, in listing
+    * order. */
+  private def versionDirs(): Array[(java.io.File, Long)] =
+    Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("v_"))
+      .flatMap(f => versionNumber(f.getName).map(f -> _))
 
   /** TIME-TRAVEL read: the table exactly as of a published version — the
     * audit/debug/reproducibility primitive every versioned store owes its
@@ -128,9 +138,9 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * publisher. Fails loudly on a version that was never published or
     * has been [[vacuum]]ed past. */
   def readAsOf(version: String): DataFrame = {
-    val current = currentVersion().map(_.stripPrefix("v_").toLong).getOrElse(
+    val current = currentNumber().getOrElse(
       throw new IllegalStateException(s"no published snapshot under $root"))
-    val n = scala.util.Try(version.stripPrefix("v_").toLong).getOrElse(
+    val n = versionNumber(version).getOrElse(
       throw new IllegalArgumentException(s"malformed version '$version'"))
     require(n <= current, s"version $version was never published (current is v_$current)")
     require(Files.isDirectory(Paths.get(root, version)),
@@ -170,21 +180,14 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * Returns the pruned version names. */
   def vacuum(keep: Int = 2): Seq[String] = {
     require(keep >= 1, s"keep $keep must be >= 1")
-    currentVersion().map(_.stripPrefix("v_").toLong) match {
+    currentNumber() match {
       case None => Seq.empty
       case Some(current) =>
         val cutoff = current - keep + 1 // keep [cutoff, current]
-        val entries = Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
-        def versionOf(name: String): Option[Long] =
-          scala.util.Try(name.stripPrefix("v_").toLong).toOption
-        val old = entries.filter(f =>
-          f.isDirectory && f.getName.startsWith("v_") &&
-            versionOf(f.getName).exists(_ < cutoff))
-        old.foreach(deleteRecursively)
-        old.foreach(f => published.remove(f.getName))
+        val old = versionDirs().filter(_._2 < cutoff)
+        old.foreach { case (f, _) => deleteRecursively(f); published.remove(f.getName) }
         // numeric version order: lexicographic would put v_10 before v_2
-        old.map(_.getName).toSeq
-          .sortBy(n => versionOf(n).getOrElse(Long.MaxValue))
+        old.sortBy(_._2).map(_._1.getName).toSeq
     }
   }
 
@@ -195,21 +198,20 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * otherwise wedge the retry. Versions at or below CURRENT are history
     * and untouched. Returns the pruned version names. */
   def recoverOrphans(): Seq[String] = {
-    val current = currentVersion().map(_.stripPrefix("v_").toLong).getOrElse(-1L)
-    def versionOf(name: String): Option[Long] =
-      scala.util.Try(name.stripPrefix("v_").stripSuffix(".claim").toLong)
-        .toOption // None = non-version entry, ignored
+    val current = currentNumber().getOrElse(-1L)
+    // a `v_<n>.claim` marker carries its version's number; entries with
+    // no number are not the store's and are ignored
     val entries = Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("v_"))
-    val orphans = entries.filter(f => f.isDirectory && versionOf(f.getName).exists(_ > current))
+      .flatMap(f => versionNumber(f.getName.stripSuffix(".claim")).map(f -> _))
+    val orphans = entries.filter { case (f, n) => f.isDirectory && n > current }
     // claims: above CURRENT = crashed publish (the wedge this method
     // exists for); at or below = left by a pre-cleanup version — stale
     // either way, and published data dirs are never touched
-    val claims = entries.filter(f => f.isFile && f.getName.endsWith(".claim") &&
-      versionOf(f.getName).isDefined)
-    orphans.foreach(deleteRecursively)
+    val claims = entries.collect { case (f, _) if f.isFile && f.getName.endsWith(".claim") => f }
+    orphans.foreach(o => deleteRecursively(o._1))
     claims.foreach(_.delete())
     // numeric version order, like vacuum (listFiles order is unspecified)
-    orphans.map(_.getName).toSeq.sortBy(n => versionOf(n).getOrElse(Long.MaxValue))
+    orphans.sortBy(_._2).map(_._1.getName).toSeq
   }
 }

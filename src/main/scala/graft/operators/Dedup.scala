@@ -260,7 +260,7 @@ object Dedup {
       if (estPairs == 0) 0.0 else headPairs / estPairs)
   }
 
-  /** Strategy rule, calibrated against measured ScaleProbe crossovers
+  /** Strategy rule, calibrated against the crossovers SCALE.md records
     * (sf0.1 corpus multiplied 1x/10x/30x: 253 / 469 / 1363 pairs per doc
     * -> inverted 2.3 s / 6.3 s / 122 s, vs MinHash-LSH 2-3 s / 6.2 s /
     * 7.1 s — the crossover sits right at ~500 pairs/doc):

@@ -365,7 +365,8 @@ object StreamingJobs {
     // continuous stream; an INNER stream-stream join emits each match on
     // arrival, so in this bounded AvailableNow replay the trailing
     // no-data batch contributes zero output rows at any scale and costs a
-    // full trigger (StreamProbe: ~0.5 s of state-store commits). Scoped
+    // full trigger (~0.5 s of state-store commits, OPTIMIZATION_r14.md §9;
+    // `tools.Profile` prints each batch's durationMs). Scoped
     // and restored like the partition count. (q_stream_session keeps the
     // default: its single-flush design EMITS in the post-flush batch.)
     val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Stage an sf1-scale dataset by deterministic MULT-x replication of the
   * driver's sf0.1 parquet (VERDICT r7 "Next" #2: one real sf1 run of the
-  * heaviest operators — the ScaleProbe fixture multiplier checks growth
-  * shape, this checks real on-disk data distribution + shuffle spill):
+  * heaviest operators on disk, so data distribution and shuffle spill are
+  * real; SCALE.md's early in-memory multiplier tables only showed growth
+  * shape). Profile the staged tables with [[Profile]]:
   *
   *  - documents: doc_id remapped per replica; replica > 0 texts get a
   *    replica token INSERTED every 8 words, so cross-replica Jaccard

@@ -3,6 +3,19 @@
 # oracle, bench.
 set -e
 cd "$(dirname "$0")/.."
+echo "=== mains (the contract mains and the three tools only) ==="
+# One-off diagnostic mains do not come back: a new probe replaces or
+# extends graft.tools.Profile instead.
+mains=$(awk 'FNR == 1 { pkg = ""; obj = "" }
+  /^package / { pkg = $2 }
+  /(^|[^A-Za-z0-9_])object +[A-Za-z0-9_]+/ {
+    match($0, /object +[A-Za-z0-9_]+/); obj = substr($0, RSTART, RLENGTH); sub(/object +/, "", obj) }
+  /def +main *\(|(extends|with) +App([^A-Za-z0-9_]|$)/ { print pkg "." obj }' \
+  $(find src/main -name '*.scala') | sort -u)
+extra=$(echo "$mains" | grep -vxF -e graft.Bench -e graft.Verify -e graft.Smoke \
+  -e graft.tools.Sf1Stage -e graft.tools.PlanDump -e graft.tools.Profile || true)
+[ -z "$extra" ] || { echo "unexpected main objects under src/main: $extra"; exit 1; }
+echo "$mains" | tr '\n' ' '; echo
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== pipeline benchmark (checks + one short run per workload) ==="
